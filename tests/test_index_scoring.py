@@ -5,27 +5,33 @@ all keys under the deepest matching prefix; no match at all -> global."""
 
 from collections import Counter
 
-from pyspark.sql import functions as F
+import pytest
 
 from inferdb_spark.operators.binning import BinSpec
 from inferdb_spark.operators.index import build_index, index_size_info
 from inferdb_spark.operators.scoring import index_score, translate
 
 
-def _python_trie_predict(kv: dict[str, float], key: str, task: str, global_v: float):
-    if key in kv:
-        return kv[key]
+def _python_trie_predict(groups: dict[str, list[float]], key: str, task: str, agg_mode: str = "keys"):
+    """`groups` maps each stored key to its training targets.  Exact hit ->
+    the key's own mean/majority; miss -> the deepest prefix shared with a
+    stored key, aggregated over the values of the keys under it ("keys") or
+    over their training rows ("rows"); the empty prefix is the global value."""
+
+    def reduce(values: list[float]) -> float:
+        if task == "regression":
+            return sum(values) / len(values)
+        c = Counter(values)
+        return max(c.items(), key=lambda t: (t[1], -t[0]))[0]
+
     parts = key.split(".")
-    for depth in range(len(parts) - 1, 0, -1):
-        prefix = ".".join(parts[:depth])
-        vals = [v for k, v in kv.items() if k.split(".")[:depth] == prefix.split(".")]
-        if vals:
-            if task == "regression":
-                return sum(vals) / len(vals)
-            c = Counter(vals)
-            top = max(c.items(), key=lambda t: (t[1], -t[0]))
-            return top[0]
-    return global_v
+    for depth in range(len(parts), -1, -1):
+        under = [ys for k, ys in groups.items() if k.split(".")[:depth] == parts[:depth]]
+        if under:
+            if depth == len(parts) or agg_mode == "keys":
+                under = [[reduce(ys)] for ys in under]
+            return reduce([y for ys in under for y in ys])
+    raise AssertionError("no stored keys")
 
 
 def _mk_train(spark):
@@ -57,7 +63,7 @@ def test_regression_index_matches_python_trie(spark):
     }
     t = translate(test, idx).select("x", "z", "key").collect()
     for r in t:
-        expected = _python_trie_predict(kv, r.key, "regression", idx.global_value)
+        expected = _python_trie_predict({k: [v] for k, v in kv.items()}, r.key, "regression")
         assert abs(scored[(r.x, r.z)] - expected) < 1e-9, r.key
 
 
@@ -104,3 +110,35 @@ def test_index_score_plan_is_broadcast_only(spark):
     plan = index_score(test, idx)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize("agg_mode", ["keys", "rows"])
+@pytest.mark.parametrize("task", ["regression", "classification"])
+def test_index_score_matches_python_trie(spark, task, agg_mode):
+    """Every fallback level, both tasks, both aggregation modes.  Keys hold
+    unequal row counts so "keys" and "rows" give different prefix and
+    global values;
+    (2, 2) is never stored (prefix fallback) and x bin 3 never occurs
+    (global fallback)."""
+    xs, zs = [1.0, 11.0, 21.0, 31.0], [1.0, 101.0, 201.0]
+    rows = []
+    for a in range(3):
+        for b in range(3):
+            if (a, b) == (2, 2):
+                continue
+            for i in range(1 + (a * 3 + b) % 4):
+                y = a * 2.0 + b * 3.0 + i * 0.5 if task == "regression" else float((a + i) % 3)
+                rows.append((xs[a], zs[b], y))
+    train = spark.createDataFrame(rows, "x double, z double, y double")
+    groups: dict[str, list[float]] = {}
+    for x, z, y in rows:
+        groups.setdefault(f"{xs.index(x)}.{zs.index(z)}", []).append(y)
+
+    idx = build_index(train, SPECS, "y", task=task, agg_mode=agg_mode)
+    test = spark.createDataFrame([(x, z) for x in xs for z in zs], "x double, z double")
+    scored = index_score(test, idx).collect()
+    assert len(scored) == len(xs) * len(zs)
+    for r in scored:
+        key = f"{xs.index(r.x)}.{zs.index(r.z)}"
+        expected = _python_trie_predict(groups, key, task, agg_mode)
+        assert abs(r.prediction - expected) < 1e-9, (key, r.prediction, expected)
