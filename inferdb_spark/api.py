@@ -60,17 +60,11 @@ def fit_index_pipeline(
 
     t0 = time.perf_counter()
     enc = apply_bins(train, specs).cache()
-    iv_task = "classification" if task == "classification" else task
-    selected = greedy_select(enc, specs, target, task=iv_task)
-    if not selected:
-        selected = specs[: max(1, min(2, len(specs)))]
+    selected = greedy_select(enc, specs, target, task=task)
     timings["solution_s"] = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    index = build_index(train, selected, target, task=task, agg_mode=agg_mode)
-    index.kv.cache().count()
-    for pa in index.prefix_aggs.values():
-        pa.cache().count()
+    index = build_index(enc, selected, target, task=task, agg_mode=agg_mode)
     timings["index_build_s"] = time.perf_counter() - t0
     enc.unpersist()
     return IndexPipeline(

@@ -29,6 +29,9 @@ from inferdb_spark.functions import text as TXT
 from inferdb_spark.functions.datetime_fns import day_name, is_weekend, pg_isodow, week_hour
 from inferdb_spark.functions.geo import spherical_distance
 from inferdb_spark.functions.math_fns import crazy_exp, ln1p_compat, sigmoid
+from inferdb_spark.operators.binning import BinSpec, apply_bins, key_expr
+from inferdb_spark.operators.index import build_index
+from inferdb_spark.operators.scoring import index_score
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
@@ -254,6 +257,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 QTY_SPLITS = [10.0, 20.0, 30.0, 40.0]
 DISC_SPLITS = [0.02, 0.04, 0.06, 0.08]
 TAX_SPLITS = [0.02, 0.04, 0.06]
+QTY_BINS = BinSpec("l_quantity", splits=QTY_SPLITS)
+IDX_SPECS = [QTY_BINS, BinSpec("l_discount", splits=DISC_SPLITS), BinSpec("l_tax", splits=TAX_SPLITS)]
 
 # dyadic (exactly-representable) linear model for deterministic scoring demos
 LIN_COEF = {"l_quantity": 0.125, "l_discount": -4.0, "l_tax": 2.5}
@@ -266,13 +271,6 @@ def _bin_expr_sql(col: str, splits: list[float]) -> str:
     """DuckDB bin id: #{s : col > s} — matches BinSpec.expr exactly."""
     terms = " + ".join(f"CAST({col} > {s!r} AS INT)" for s in splits)
     return f"({terms})"
-
-
-def _bin_expr_spark(col: str, splits: list[float]) -> F.Column:
-    e = F.lit(0)
-    for s in splits:
-        e = e + F.when(F.col(col) > F.lit(s), 1).otherwise(0)
-    return e.cast("int")
 
 
 # ---------------------------------------------------------------------------
@@ -608,14 +606,20 @@ def q_index_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `{x}_translate()` stage (P5): bin-encode + compound key as one
     narrow projection (src/transpiler.py:1101-1274)."""
     li = _t(spark, sf_dir, "lineitem")
-    return li.select(
+    return apply_bins(li, IDX_SPECS).select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
-        F.concat_ws(
-            ".",
-            _bin_expr_spark("l_quantity", QTY_SPLITS).cast("string"),
-            _bin_expr_spark("l_discount", DISC_SPLITS).cast("string"),
-            _bin_expr_spark("l_tax", TAX_SPLITS).cast("string"),
-        ).alias("key"),
+        key_expr(IDX_SPECS).alias("key"),
+    )
+
+
+def _idx_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Index features plus the integer-cents target: a row-weighted index
+    over integer targets is exact, so engines agree bit for bit."""
+    return _t(spark, sf_dir, "lineitem").select(
+        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
+        (F.col("l_orderkey") % 5 != 0).alias("is_train"),
+        *[s.column for s in IDX_SPECS],
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
 
 
@@ -629,21 +633,9 @@ def q_index_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_index_kv_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kv build: groupBy(key) -> mean (A1, src/transpiler.py:993-996).
     Values aggregate as integer cents (exact) and divide once."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 != 0)
-    enc = li.select(
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("b1"),
-        _bin_expr_spark("l_discount", DISC_SPLITS).alias("b2"),
-        _bin_expr_spark("l_tax", TAX_SPLITS).alias("b3"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    return (
-        enc.groupBy("b1", "b2", "b3")
-        .agg((F.sum("cents").cast("double") / F.count("*")).alias("v"))
-        .select(
-            F.concat_ws(".", "b1", "b2", "b3").alias("key"),
-            (F.col("v") / 100).alias("value"),
-        )
-    )
+    train = _idx_rows(spark, sf_dir).filter("is_train")
+    index = build_index(train, IDX_SPECS, "cents", agg_mode="rows")
+    return index.kv.select("key", (F.col("value") / 100).alias("value"))
 
 
 @gate(
@@ -659,51 +651,11 @@ def q_index_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/transpiler.py:1054-1099, sql_scripts/prefix_search.sql).
     Row-weighted prefix aggregates (exact integer arithmetic; see
     operators/index.py for the unweighted reference-parity mode)."""
-    li = _t(spark, sf_dir, "lineitem")
-    base = li.select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
-        (F.col("l_orderkey") % 5 != 0).alias("is_train"),
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("b1"),
-        _bin_expr_spark("l_discount", DISC_SPLITS).alias("b2"),
-        _bin_expr_spark("l_tax", TAX_SPLITS).alias("b3"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    train = base.filter("is_train")
-    test = base.filter(~F.col("is_train"))
-    # ONE aggregation of the train scan; prefix levels and the global mean
-    # all roll up from the tiny per-key stats (at 100 TB the fact table is
-    # read once for the whole index build)
-    kvstats = train.groupBy("b1", "b2", "b3").agg(
-        F.sum("cents").alias("s"), F.count("*").alias("c")
-    )
-    kvstats = kvstats.cache()  # materialized stage: kv/p2/p1/global all read it
-    kv = kvstats.select(
-        F.concat_ws(".", "b1", "b2", "b3").alias("key"),
-        (F.col("s").cast("double") / F.col("c")).alias("v_exact"),
-    )
-    p2 = (
-        kvstats.groupBy("b1", "b2")
-        .agg((F.sum("s").cast("double") / F.sum("c")).alias("v_p2"))
-        .select(F.concat_ws(".", "b1", "b2").alias("prefix_2"), "v_p2")
-    )
-    p1 = (
-        kvstats.groupBy("b1")
-        .agg((F.sum("s").cast("double") / F.sum("c")).alias("v_p1"))
-        .select(F.col("b1").cast("string").alias("prefix_1"), "v_p1")
-    )
-    g = kvstats.agg((F.sum("s").cast("double") / F.sum("c")).alias("g"))
-    scored = (
-        test.withColumn("key", F.concat_ws(".", "b1", "b2", "b3"))
-        .withColumn("prefix_2", F.concat_ws(".", "b1", "b2"))
-        .withColumn("prefix_1", F.col("b1").cast("string"))
-        .join(F.broadcast(kv), "key", "left")
-        .join(F.broadcast(p2), "prefix_2", "left")
-        .join(F.broadcast(p1), "prefix_1", "left")
-        .crossJoin(F.broadcast(g))
-    )
-    return scored.select(
+    rows = _idx_rows(spark, sf_dir)
+    index = build_index(rows.filter("is_train"), IDX_SPECS, "cents", agg_mode="rows")
+    return index_score(rows.filter(~F.col("is_train")), index).select(
         "row_id",
-        (F.coalesce("v_exact", "v_p2", "v_p1", "g") / 100).alias("prediction"),
+        (F.col("prediction") / 100).alias("prediction"),
         (F.col("cents").cast("double") / 100).alias("actual"),
     )
 

@@ -11,9 +11,10 @@ from inferdb_spark.catalog import load_table
 from inferdb_spark.functions.math_fns import sigmoid
 from inferdb_spark.gate import (
     DISC_SPLITS,
+    IDX_SPECS,
+    QTY_BINS,
     QTY_SPLITS,
     TAX_SPLITS,
-    _bin_expr_spark,
     _bin_expr_sql,
     gate,
 )
@@ -55,7 +56,7 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5 adjustment (src/optimizer.py:53-82) — one groupBy + tiny cross join."""
     li = load_table(spark, sf_dir, "lineitem")
     enc = li.select(
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("bin"),
+        QTY_BINS.expr().alias("bin"),
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("y"),
     )
     tot = enc.agg(F.count("*").alias("tn"), F.sum("y").alias("te"))
@@ -709,9 +710,7 @@ def q_query_integration(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = li.select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("row_id"),
         (F.col("l_orderkey") % 5 != 0).alias("is_train"),
-        _bin_expr_spark("l_quantity", QTY_SPLITS).alias("b1"),
-        _bin_expr_spark("l_discount", DISC_SPLITS).alias("b2"),
-        _bin_expr_spark("l_tax", TAX_SPLITS).alias("b3"),
+        *[s.expr().alias(f"b{i}") for i, s in enumerate(IDX_SPECS, 1)],
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         "l_returnflag",
     )

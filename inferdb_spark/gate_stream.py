@@ -142,7 +142,6 @@ def q_stream_index_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     train = ev2.filter(F.col("event_id") % 3 != 0)
     index = build_index(train, specs, "cents", task="regression", agg_mode="rows")
-    index.kv.cache().count()
 
     stage, schema = _stage_events(spark, sf_dir)
     stream = (

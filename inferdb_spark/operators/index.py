@@ -37,16 +37,6 @@ from inferdb_spark.operators.binning import BinSpec, apply_bins, key_expr
 BIN_SUFFIX = "_bin"
 
 
-def _mode_value(df: DataFrame, group_cols: list[str], value: str = "value") -> DataFrame:
-    """Majority vote with lowest-value tiebreak (deterministic analog of the
-    reference's pandas idxmax first-occurrence, src/transpiler.py:986-992 —
-    SURVEY.md §7 known-hard 4)."""
-    counted = df.groupBy(*group_cols, value).agg(F.count("*").alias("cnt"))
-    return counted.groupBy(*group_cols).agg(
-        F.max_by(F.col(value), F.struct(F.col("cnt"), -F.col(value))).alias(value)
-    )
-
-
 @dataclass
 class KVIndex:
     """Built index artifacts: all small DataFrames, broadcast at score time."""
@@ -61,6 +51,25 @@ class KVIndex:
     def depth(self) -> int:
         return len(self.specs)
 
+    def unpersist(self) -> None:
+        """Release the cached kv and prefix relations."""
+        self.kv.unpersist()
+        for df in self.prefix_aggs.values():
+            df.unpersist()
+
+
+def _rollup(stats: DataFrame, cols: list[str], task: str) -> DataFrame:
+    """Value per group of `cols` over weighted per-key stats: the weighted
+    mean sum(ws)/sum(w) (regression), or the class with the largest total
+    weight, ties to the lowest class (classification; the deterministic
+    analog of the reference's pandas idxmax, src/transpiler.py:986-992)."""
+    if task == "regression":
+        return stats.groupBy(*cols).agg((F.sum("ws") / F.sum("w")).alias("value"))
+    votes = stats.groupBy(*cols, "value").agg(F.sum("w").alias("w"))
+    return votes.groupBy(*cols).agg(
+        F.max_by(F.col("value"), F.struct(F.col("w"), -F.col("value"))).alias("value")
+    )
+
 
 def build_index(
     train: DataFrame,
@@ -71,11 +80,15 @@ def build_index(
 ) -> KVIndex:
     """kv build = one groupBy over the encoded training rows
     (src/transpiler.py:986-996: mean for regression, majority for
-    classification), plus one tiny groupBy per prefix length.
+    classification), then one tiny rollup per prefix length and one for
+    the global value.
 
-    The encoded frame is aggregated once into per-key stats; prefix
-    aggregates derive from that small result, never rescanning the base
-    table — at 100 TB the base data is read exactly once.
+    The training rows are aggregated once into per-key stats; every level
+    derives from that small result, never rescanning the base table — at
+    100 TB the base data is read exactly once.  A stored key weighs its
+    training-row count ("rows") or 1 ("keys").  The returned kv and prefix
+    relations are cached and materialised; `KVIndex.unpersist` releases
+    them.
     """
     k = len(specs)
     enc = apply_bins(train, specs, BIN_SUFFIX)
@@ -85,77 +98,32 @@ def build_index(
     if task == "regression":
         # count(y), not count(*): null targets must not dilute the mean
         # (pandas .mean() semantics, src/transpiler.py:993-996)
-        per_key = enc.groupBy(*bin_cols).agg(
-            F.sum(y).alias("s"), F.count(y).alias("c")
-        )
-        per_key.cache()
-        kv = per_key.select(
-            key_expr(specs, BIN_SUFFIX).alias("key"),
-            (F.col("s") / F.col("c")).alias("value"),
-        )
-        prefix_aggs: dict[int, DataFrame] = {}
-        for L in range(1, k):
-            pcols = bin_cols[:L]
-            pkey = F.concat_ws(".", *[F.col(c).cast("string") for c in pcols])
-            if agg_mode == "rows":
-                agg = per_key.groupBy(*pcols).agg(
-                    (F.sum("s") / F.sum("c")).alias("value")
-                )
-            else:  # unweighted over keys (trie semantics)
-                agg = per_key.groupBy(*pcols).agg(
-                    F.avg(F.col("s") / F.col("c")).alias("value")
-                )
-            prefix_aggs[L] = agg.select(pkey.alias(f"prefix_{L}"), "value")
-        if agg_mode == "rows":
-            g = per_key.agg((F.sum("s") / F.sum("c")).alias("g")).first()["g"]
-        else:
-            g = per_key.agg(F.avg(F.col("s") / F.col("c")).alias("g")).first()["g"]
+        stats = enc.groupBy(*bin_cols).agg(F.sum(y).alias("ws"), F.count(y).alias("w"))
+        if agg_mode == "keys":  # a key with only null targets weighs 0
+            stats = stats.select(
+                *bin_cols, (F.col("ws") / F.col("w")).alias("ws"), F.least("w", F.lit(1)).alias("w")
+            )
     else:
-        per_key_cls = enc.groupBy(*bin_cols, y.cast("long").alias("value")).agg(
-            F.count("*").alias("cnt")
-        )
-        per_key_cls.cache()
-        # majority per key, lowest-class tiebreak
-        kv_bins = per_key_cls.groupBy(*bin_cols).agg(
-            F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value"))).alias(
-                "value"
-            )
-        )
-        kv = kv_bins.select(
-            key_expr(specs, BIN_SUFFIX).alias("key"),
+        stats = enc.groupBy(*bin_cols, y.cast("long").alias("value")).agg(F.count("*").alias("w"))
+        if agg_mode == "keys":  # one vote per key, for its majority class
+            stats = _rollup(stats, bin_cols, task).withColumn("w", F.lit(1))
+    stats = stats.cache()
+
+    levels: dict[int, DataFrame] = {}
+    for L in range(k, 0, -1):
+        levels[L] = _rollup(stats, bin_cols[:L], task).select(
+            key_expr(specs[:L], BIN_SUFFIX).alias("key" if L == k else f"prefix_{L}"),
             F.col("value").cast("double").alias("value"),
-        )
-        prefix_aggs = {}
-        for L in range(1, k):
-            pcols = bin_cols[:L]
-            pkey = F.concat_ws(".", *[F.col(c).cast("string") for c in pcols])
-            if agg_mode == "rows":
-                src = per_key_cls.groupBy(*pcols, "value").agg(
-                    F.sum("cnt").alias("cnt")
-                )
-            else:  # majority over per-key majority values (trie semantics)
-                src = kv_bins.groupBy(*pcols, "value").agg(F.count("*").alias("cnt"))
-            agg = src.groupBy(*pcols).agg(
-                F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value"))).alias(
-                    "value"
-                )
-            )
-            prefix_aggs[L] = agg.select(
-                pkey.alias(f"prefix_{L}"), F.col("value").cast("double").alias("value")
-            )
-        if agg_mode == "rows":
-            counts = per_key_cls.groupBy("value").agg(F.sum("cnt").alias("cnt"))
-        else:
-            counts = kv_bins.groupBy("value").agg(F.count("*").alias("cnt"))
-        g = counts.select(
-            F.max_by(F.col("value"), F.struct(F.col("cnt"), -F.col("value")))
-        ).first()[0]
+        ).cache()
+        levels[L].count()
+    g = _rollup(stats, [], task).first()["value"]
+    stats.unpersist()
 
     return KVIndex(
         specs=specs,
         task=task,
-        kv=kv,
-        prefix_aggs=prefix_aggs,
+        kv=levels.pop(k),
+        prefix_aggs=levels,
         global_value=float(g) if g is not None else 0.0,
     )
 
@@ -218,12 +186,10 @@ def unseen_paths(index: KVIndex) -> DataFrame:
     anti join against the stored keys."""
     spark = index.kv.sparkSession
     domain = None
-    for i, s in enumerate(index.specs):
-        d = spark.createDataFrame([(b,) for b in range(s.n_bins)], f"b{i} int")
+    for s in index.specs:
+        d = spark.range(s.n_bins).select(F.col("id").cast("int").alias(s.column + BIN_SUFFIX))
         domain = d if domain is None else domain.crossJoin(d)
-    all_keys = domain.select(
-        F.concat_ws(".", *[F.col(f"b{i}").cast("string") for i in range(len(index.specs))]).alias("key")
-    )
+    all_keys = domain.select(key_expr(index.specs, BIN_SUFFIX).alias("key"))
     return all_keys.join(index.kv.select("key"), "key", "left_anti")
 
 

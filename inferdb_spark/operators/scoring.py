@@ -36,7 +36,6 @@ def index_score(
     df: DataFrame,
     index: KVIndex,
     prediction_col: str = "prediction",
-    keep_bin_cols: bool = False,
 ) -> DataFrame:
     """translate → broadcast kv probe → prefix-fallback coalesce.
 
@@ -52,10 +51,7 @@ def index_score(
     fallback_cols: list[Column] = [F.col("_v_exact")]
     for L in range(k - 1, 0, -1):
         pa = index.prefix_aggs[L].withColumnRenamed("value", f"_v_p{L}")
-        prefix = F.concat_ws(
-            ".", *[F.col(c).cast("string") for c in bin_cols[:L]]
-        ).alias(f"prefix_{L}")
-        out = out.withColumn(f"prefix_{L}", prefix).join(
+        out = out.withColumn(f"prefix_{L}", key_expr(index.specs[:L], BIN_SUFFIX)).join(
             F.broadcast(pa), f"prefix_{L}", "left"
         )
         fallback_cols.append(F.col(f"_v_p{L}"))
@@ -64,9 +60,7 @@ def index_score(
     drop = ["key", "_v_exact"] + [f"prefix_{L}" for L in range(1, k)] + [
         f"_v_p{L}" for L in range(1, k)
     ]
-    if not keep_bin_cols:
-        drop += bin_cols
-    return out.drop(*drop)
+    return out.drop(*drop, *bin_cols)
 
 
 # ---------------------------------------------------------------------------

@@ -14,6 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, capped at 48g: a fixed 48g heap lets
+    the JVM grow past what a small host has and get OOM-killed."""
+    try:
+        total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{min(total // 4 >> 20, 48 << 10)}m"
+
+
 def get_spark(
     app_name: str = "inferdb_spark",
     master: str | None = None,
@@ -49,7 +59,7 @@ def get_spark(
         # events.parquet stores TIMESTAMP(NANOS) which the vectorized parquet
         # reader rejects; read as long and convert (see catalog.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -79,23 +79,23 @@ def test_key_expr_format(spark):
 
 def test_wide_schema_binning_784_columns(spark):
     """SURVEY §7 known-hard 3: MNIST-width tables (784 features) must
-    translate without blowing whole-stage-codegen's 64KB method limit —
-    the Bucketizer path bins every column in one vectorized pass, and the
-    when-chain path must still produce identical bin ids (Spark falls back
-    to interpreted eval per-expression if codegen overflows)."""
+    translate without blowing whole-stage-codegen's 64KB method limit
+    (Spark falls back to interpreted eval per-expression if codegen
+    overflows) and still give every bin id #{s : x > s}."""
     import pyspark.sql.functions as F
 
-    from inferdb_spark.operators.binning import BinSpec, apply_bins, apply_bins_bucketizer
+    from inferdb_spark.operators.binning import BinSpec, apply_bins
 
     n_cols = 784
+    splits = [20.0, 40.0, 60.0, 80.0]
     cols = [f"f_{i}" for i in range(n_cols)]
     df = spark.range(0, 50).select(
         "id", *[((F.col("id") * (i + 3)) % 97).cast("double").alias(c) for i, c in enumerate(cols)]
     )
-    specs = [BinSpec(column=c, splits=[20.0, 40.0, 60.0, 80.0]) for c in cols]
-    a = apply_bins(df, specs).select("id", *[c + "_bin" for c in cols])
-    b = apply_bins_bucketizer(df, specs).select("id", *[c + "_bin" for c in cols])
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
-    assert rows_a == rows_b
-    assert len(rows_a) == 50
+    specs = [BinSpec(column=c, splits=splits) for c in cols]
+    got = sorted(map(tuple, apply_bins(df, specs).select("id", *[c + "_bin" for c in cols]).collect()))
+    expected = [
+        (i, *[sum(((i * (j + 3)) % 97) > s for s in splits) for j in range(n_cols)])
+        for i in range(50)
+    ]
+    assert got == expected

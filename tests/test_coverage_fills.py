@@ -1,5 +1,5 @@
-"""Bucketizer wide path, index persistence, multiclass IV, datetime
-imputation, unseen paths, standalone report, CSV source."""
+"""Index persistence, multiclass IV, datetime imputation, unseen paths,
+standalone report, CSV source."""
 
 import shutil
 import tempfile
@@ -7,11 +7,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from inferdb_spark.api import fit_index_pipeline, standalone_report
-from inferdb_spark.operators.binning import (
-    BinSpec,
-    apply_bins,
-    apply_bins_bucketizer,
-)
+from inferdb_spark.operators.binning import BinSpec, apply_bins
 from inferdb_spark.operators.index import (
     build_index,
     load_index,
@@ -25,27 +21,6 @@ from inferdb_spark.operators.preprocess import (
     positional_rename,
 )
 from inferdb_spark.operators.scoring import index_score
-
-
-def test_bucketizer_matches_expression_path(spark):
-    rows = [(float(i % 53), float((i * 7) % 101), None if i % 11 == 0 else float(i % 17)) for i in range(300)]
-    df = spark.createDataFrame(rows, "a double, b double, c double")
-    specs = [
-        BinSpec(column="a", splits=[10.0, 20.0, 30.0, 40.0]),
-        BinSpec(column="b", splits=[25.0, 50.0, 75.0]),
-        BinSpec(column="c", splits=[5.0, 10.0]),  # has nulls -> null_bin 0
-    ]
-    expr = apply_bins(df, specs).select("a_bin", "b_bin", "c_bin").collect()
-    buck = apply_bins_bucketizer(df, specs).select("a_bin", "b_bin", "c_bin").collect()
-    assert [tuple(r) for r in expr] == [tuple(r) for r in buck]
-
-
-def test_bucketizer_boundary_semantics(spark):
-    # boundary values: x == split must land in the LOWER bin (x > s counts)
-    df = spark.createDataFrame([(10.0,), (10.000001,)], "a double")
-    spec = BinSpec(column="a", splits=[10.0, 20.0])
-    got = [r.a_bin for r in apply_bins_bucketizer(df, [spec]).collect()]
-    assert got == [0, 1]
 
 
 def test_index_save_load_roundtrip(spark):

@@ -28,7 +28,7 @@ def _python_trie_predict(groups: dict[str, list[float]], key: str, task: str, ag
     for depth in range(len(parts), -1, -1):
         under = [ys for k, ys in groups.items() if k.split(".")[:depth] == parts[:depth]]
         if under:
-            if depth == len(parts) or agg_mode == "keys":
+            if agg_mode == "keys":
                 under = [[reduce(ys)] for ys in under]
             return reduce([y for ys in under for y in ys])
     raise AssertionError("no stored keys")
@@ -117,9 +117,8 @@ def test_index_score_plan_is_broadcast_only(spark):
 def test_index_score_matches_python_trie(spark, task, agg_mode):
     """Every fallback level, both tasks, both aggregation modes.  Keys hold
     unequal row counts so "keys" and "rows" give different prefix and
-    global values;
-    (2, 2) is never stored (prefix fallback) and x bin 3 never occurs
-    (global fallback)."""
+    global values; (2, 2) is never stored (prefix fallback) and x bin 3
+    never occurs (global fallback)."""
     xs, zs = [1.0, 11.0, 21.0, 31.0], [1.0, 101.0, 201.0]
     rows = []
     for a in range(3):
@@ -142,3 +141,17 @@ def test_index_score_matches_python_trie(spark, task, agg_mode):
         key = f"{xs.index(r.x)}.{zs.index(r.z)}"
         expected = _python_trie_predict(groups, key, task, agg_mode)
         assert abs(r.prediction - expected) < 1e-9, (key, r.prediction, expected)
+
+
+def test_build_index_leaves_no_cached_relation_behind(spark):
+    """Unpersisting the returned kv and prefix relations must return the
+    session to the cached relations it held before the build: the per-key
+    stats the build caches for its rollups are released by the build."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    train = _mk_train(spark)
+    before = len(persisted())
+    idx = build_index(train, SPECS, "y", task="regression")
+    idx.kv.unpersist()
+    for pa in idx.prefix_aggs.values():
+        pa.unpersist()
+    assert len(persisted()) <= before

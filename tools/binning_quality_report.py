@@ -129,6 +129,7 @@ def compare_binning(
                 .cast("double").alias("hit")
             ).agg(F.avg("hit")).first()[0]
             out[f"{method}_accuracy"] = float(acc)
+        index.unpersist()
         # in-sample objective on the SAME prebin partition space
         obj = 0.0
         for c, s in zip(features, fitted):
